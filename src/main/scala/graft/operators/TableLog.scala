@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** A minimal TRANSACTION-LOG table format — versioned snapshots over
@@ -21,9 +21,19 @@ import org.apache.spark.sql.functions.col
   *    SIDECARS ([[commitDeletes]]), a deletes-reset marker
   *    ([[compactTable]]), and optional row-lineage CHANGE-FEED
   *    sidecars ([[commitWithFeed]]) that make [[changes]] O(delta);
-  *  - the snapshot at version V = union of adds minus removes over
-  *    entries ≤ V — reading never lists the data directory, only the
-  *    log (O(#commits), not O(#files));
+  *  - the state at version V is ONE [[Snapshot]], built by ONE replay
+  *    ([[replay]]): the latest checkpoint at or below V, then each
+  *    later entry read once — active files (adds minus removes, with
+  *    their commit-time metadata), in-force delete sidecars, zone-map
+  *    refs, the schema ref and the constraint refs. Every read path
+  *    (snapshots, the Catalyst relation, conflict checks, maintenance
+  *    and the metadata faces) projects that one value, and a caller
+  *    needing several projections of one version replays once. Zone
+  *    stats decode lazily, once per snapshot. Reading never lists the
+  *    data directory, only the log (O(#commits since the checkpoint),
+  *    not O(#files)); [[writeCheckpoint]] stores a snapshot as
+  *    `_log/<V>.ckpt`, [[expireLog]] drops the entries below it, and a
+  *    read of an expired version fails loudly;
   *  - commits are OPTIMISTIC and ATOMIC: the entry body is written to
   *    a temp file and published with an exclusive create-if-absent
   *    (a hard link on file:// — the POSIX claim-with-content
@@ -239,20 +249,17 @@ object TableLog {
 
   def describeDetail(spark: SparkSession, root: String): Seq[org.apache.spark.sql.Row] = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    val v = vs.lastOption.orElse(checkpointVersions(spark, root).lastOption)
-      .getOrElse(sys.error(s"TableLog.describeDetail: empty log at $root"))
-    val files = activeFilesWithMeta(spark, root)
-    val size = files.map { case (p, m) =>
+    val s = replay(spark, root).committed
+    val size = s.filesWithMeta.map { case (p, m) =>
       parseFileMeta(m).map(_._1).getOrElse(
         f.getFileStatus(new Path(resolve(root, p))).getLen)
     }.sum
     Seq(org.apache.spark.sql.Row(
-      "tablelog", root, v, files.size.toLong, size,
-      activeDeletes(spark, root).size.toLong,
-      activeConstraints(spark, root).size.toLong,
-      activeSchemaRef(spark, root).nonEmpty,
-      vs.size.toLong))
+      "tablelog", root, s.version, s.files.size.toLong, size,
+      s.deletes.size.toLong,
+      constraintsFor(spark, root, s.checkRefs).size.toLong,
+      s.schemaRef.nonEmpty,
+      versions(spark, root).size.toLong))
   }
 
   /** Log paths must stay parseable by the line-oriented entry format:
@@ -376,55 +383,49 @@ object TableLog {
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     var attempt = 0
     while (attempt < 64) {
-      val v = versions(spark, root).lastOption.getOrElse(-1L) + 1L
+      val vs = versions(spark, root)
+      val v = vs.lastOption.getOrElse(-1L) + 1L
       if (expectActive.nonEmpty || expectDeletes.isDefined ||
           expectSchema.isDefined || expectChecks.isDefined ||
           expectNoConflictingAdds.isDefined) {
-        val nowActive =
-          if (v == 0L) Set.empty[String]
-          else activeFiles(spark, root).toSet
-        val gone = expectActive.filterNot(nowActive)
+        // ONE replay of the head serves every expectation below (an
+        // empty log replays to the empty snapshot)
+        val now = replay(spark, root)
+        val gone = expectActive.filterNot(now.files.toSet)
         if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
           s"TableLog.commit: conflict at $root — files read by this " +
             s"rewrite were replaced by a concurrent commit (e.g. " +
             s"${gone.head}); re-read the table and re-derive")
         expectDeletes.foreach { expected =>
-          val now =
-            if (v == 0L) Seq.empty[String]
-            else activeDeletes(spark, root)
-          if (now.toSet != expected.toSet)
+          if (now.deletes.toSet != expected.toSet)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the delete-sidecar " +
                 s"set changed since this rewrite's read (read through " +
-                s"${expected.size}, now ${now.size}); committing it " +
+                s"${expected.size}, now ${now.deletes.size}); committing it " +
                 "would resurrect or cancel deletes. Re-read and re-derive")
         }
         expectSchema.foreach { expected =>
-          val now =
-            if (v == 0L) None else activeSchemaRef(spark, root)
-          if (now != expected)
+          if (now.schemaRef != expected)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the table schema " +
-                s"changed since this writer's read ($expected -> $now); " +
-                "a schema derived from the stale shape would silently " +
-                "hide the other evolution's columns. Re-read and re-derive")
+                s"changed since this writer's read ($expected -> " +
+                s"${now.schemaRef}); a schema derived from the stale shape " +
+                "would silently hide the other evolution's columns. " +
+                "Re-read and re-derive")
         }
         expectChecks.foreach { expected =>
           // a checked writer validated its batch against the
           // constraint set it read; a constraint added or dropped
           // since would let the batch land un(re)validated
-          val now =
-            if (v == 0L) Seq.empty[String]
-            else activeCheckRefs(f, root, None)
-          if (now.toSet != expected.toSet)
+          if (now.checkRefs.toSet != expected.toSet)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the constraint set " +
                 s"changed since this writer's validation (read through " +
-                s"${expected.size} refs, now ${now.size}); the batch " +
-                "must re-validate. Re-read and re-derive")
+                s"${expected.size} refs, now ${now.checkRefs.size}); the " +
+                "batch must re-validate. Re-read and re-derive")
         }
         expectNoConflictingAdds.foreach { case (readV, conflicts) =>
-          val added = versions(spark, root).filter(_ > readV)
+          val added = vs.filter(_ > readV)
             .flatMap(x => readEntry(f, entryPath(root, x)).add)
           val clash = added.filter(conflicts)
           if (clash.nonEmpty)
@@ -554,14 +555,6 @@ object TableLog {
   def checkpointVersions(spark: SparkSession, root: String): Seq[Long] =
     checkpoints(fs(spark, root), root)
 
-  private def checkpoints(f: FileSystem, root: String): Seq[Long] = {
-    val dir = new Path(logDir(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".ckpt") && s.getLen > 0)
-      .map(_.getPath.getName.stripSuffix(".ckpt").toLong).sorted
-  }
-
   private def readCheckpoint(f: FileSystem, root: String,
                              v: Long): Checkpoint = {
     val e = readEntry(f, checkpointPath(root, v)) // same line format
@@ -576,7 +569,9 @@ object TableLog {
     * — thousands after a month of streaming commits); with it,
     * readers load the fold and apply only entries AFTER it. The
     * checkpoint carries active files, in-force delete sidecars (net
-    * of resets), zone-map paths, and all idempotence tags, so every
+    * of resets), zone-map paths, the schema ref (for an empty version
+    * with none, its last non-empty version's schema, staged here) and
+    * all idempotence tags, so every
     * read path and the exactly-once ingest contract survive a
     * subsequent [[expireLog]]. Idempotent: checkpointing an
     * already-checkpointed version is a no-op. Returns V. */
@@ -587,33 +582,27 @@ object TableLog {
     val v = vs.last
     val p = checkpointPath(root, v)
     if (f.exists(p)) return v
-    val filesMeta = activeFilesWithMeta(spark, root, Some(v))
-    val files = filesMeta.map(_._1)
-    val dels = activeDeletes(spark, root, Some(v))
-    val entries = vs.map(x => readEntry(f, entryPath(root, x)))
-    val zmaps = (checkpoints(f, root).flatMap(c =>
-        readCheckpoint(f, root, c).zmap) ++ entries.flatMap(_.zmap))
-      .distinct.filter(rel => f.exists(new Path(resolve(root, rel))))
+    // the snapshot at v IS the fold: its replay starts from the
+    // previous checkpoint, so constraint refs already inside that fold
+    // are never re-appended (no doubling per checkpoint cycle)
+    val s = replay(spark, root, Some(v))
+    // an EMPTY version reads with its last non-empty version's schema;
+    // expiring the log below this checkpoint would lose that version,
+    // so the checkpoint declares the schema itself
+    val schemaRef = s.schemaRef.orElse(
+      if (s.files.nonEmpty) None
+      else lastNonEmptyFiles(spark, root, v).map(fs => stageSchema(spark,
+        root, s"ckpt$v", spark.read.parquet(resolve(root, fs.head)).schema)))
     val tags = committedTags(spark, root).toSeq.sorted
     tags.foreach(t => validatePaths(Seq(t)))
-    val sch = activeSchemaRef(spark, root, Some(v)).toSeq
-    // constraint refs fold IN VERSION ORDER (their semantics are
-    // last-wins by name, so the fold is the concatenation); entries
-    // AT or BELOW the previous checkpoint are already inside its
-    // fold — re-appending them would double the list per checkpoint
-    // cycle (exponential growth when expireLog lags)
-    val prevCp = checkpoints(f, root).lastOption
-    val cks = prevCp.toSeq
-      .flatMap(c => readCheckpoint(f, root, c).checks) ++
-      entries.filter(e => prevCp.forall(e.version > _)).flatMap(_.checks)
     // serialize through the ENTRY line format (add=files, cdf=tags)
     // so one parser serves both artifact kinds
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val body = s"""{"version":$v,"reset":0,"add":${arr(files)},""" +
-      s""""addmeta":${arr(filesMeta.map(_._2))},""" +
-      s""""remove":[],"deletes":${arr(dels)},""" +
-      s""""cdf":${arr(tags)},"zmap":${arr(zmaps)},"schema":${arr(sch)},""" +
-      s""""checks":${arr(cks)}}"""
+    val body = s"""{"version":$v,"reset":0,"add":${arr(s.files)},""" +
+      s""""addmeta":${arr(s.filesWithMeta.map(_._2))},""" +
+      s""""remove":[],"deletes":${arr(s.deletes)},""" +
+      s""""cdf":${arr(tags)},"zmap":${arr(s.zmaps)},""" +
+      s""""schema":${arr(schemaRef.toSeq)},"checks":${arr(s.checkRefs)}}"""
     val tmp = new Path(s"${logDir(root)}/.ckpt-tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, false)
     try { out.write(body.getBytes("UTF-8")) } finally out.close()
@@ -641,18 +630,17 @@ object TableLog {
     doomed
   }
 
-  /** The ACTIVE file set (root-relative) at `asOf` (default: latest). */
   /** The replay plan for a read at `asOf`: the largest checkpoint at
     * or below it (if any) plus the CONTIGUOUS entry versions after it
-    * up to `asOf`. Fails loudly when [[expireLog]] removed entries
-    * the read would need — an expired version must error, never
-    * silently under-read. */
+    * up to `asOf`; (None, Nil) for a fresh table with no log at all.
+    * Fails loudly when [[expireLog]] removed entries the read would
+    * need — an expired version must error, never silently under-read. */
   private def replayPlan(f: FileSystem, root: String,
                          asOf: Option[Long]): (Option[Long], Seq[Long]) = {
-    val vs = versionsIn(f, root)
+    val (vs, cps) = listLog(f, root)
+    if (vs.isEmpty && cps.isEmpty) return (None, Nil)
     val upTo = asOf.fold(vs)(v => vs.filter(_ <= v))
-    val cp = checkpoints(f, root).filter(cv => asOf.forall(cv <= _))
-      .lastOption
+    val cp = cps.filter(cv => asOf.forall(cv <= _)).lastOption
     // the largest EXISTING entry ≤ asOf. When no entry survives, a
     // checkpoint may stand in ONLY for its own exact version: a later
     // expireLog deletes an earlier checkpoint's entry too, so for an
@@ -670,7 +658,9 @@ object TableLog {
           "checkpoint were removed by expireLog (log retention has " +
           "passed this version); serving the older checkpoint would " +
           "silently under-read"
-      else s"TableLog: no committed version at $root asOf=$asOf")
+      else s"TableLog: no retained version at $root asOf=$asOf — it " +
+        "precedes the first commit, or expireLog removed it below a " +
+        "checkpoint")
     val from = cp.fold(0L)(_ + 1L)
     val needed = (from to target.get)
     val have = upTo.filter(_ >= from).toSet
@@ -681,67 +671,134 @@ object TableLog {
     (cp, needed)
   }
 
-  private def versionsIn(f: FileSystem, root: String): Seq[Long] = {
+  private def versionsIn(f: FileSystem, root: String): Seq[Long] =
+    listLog(f, root)._1
+
+  private def checkpoints(f: FileSystem, root: String): Seq[Long] =
+    listLog(f, root)._2
+
+  /** ONE listing of `_log`: the versions of its non-empty entry files
+    * and of its non-empty checkpoints, each ascending. */
+  private def listLog(f: FileSystem, root: String): (Seq[Long], Seq[Long]) = {
     val dir = new Path(logDir(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".json") && s.getLen > 0)
-      .map(_.getPath.getName.stripSuffix(".json").toLong).sorted
+    val names =
+      if (!f.exists(dir)) Seq.empty[String]
+      else f.listStatus(dir).toSeq.filter(_.getLen > 0).map(_.getPath.getName)
+    def versionsOf(ext: String) =
+      names.filter(_.endsWith(ext)).map(_.stripSuffix(ext).toLong).sorted
+    (versionsOf(".json"), versionsOf(".ckpt"))
   }
 
-  def activeFiles(spark: SparkSession, root: String,
-                  asOf: Option[Long] = None): Seq[String] =
-    activeFilesWithMeta(spark, root, asOf).map(_._1)
+  /** The table state at one version — the ONE value every read path
+    * projects. Built by [[replay]]; immutable, and cheap to hold (KBs
+    * of driver metadata).
+    *  - `filesWithMeta`: the active files (root-relative, replay
+    *    order) with their commit-time [[LogEntry.addMeta]] string (`-`
+    *    = unknown: pre-format entries or a writer that could not stat)
+    *    — the zero-stat planning input of [[TableLogFileIndex]];
+    *  - `deletes`: the delete sidecars in force — cumulative since the
+    *    last deletes-RESET ([[compactTable]] emits it after
+    *    materializing the survivors); a checkpoint's list is already
+    *    net of resets at its version, a reset after it drops it;
+    *  - `schemaRef`: the LAST schema-carrying commit's ref (None =
+    *    pre-evolution table: readers take the files' own schema); a
+    *    checkpoint of an empty version declares the schema of its
+    *    last non-empty version, which expiry would otherwise lose;
+    *  - `checkRefs`: the constraint-change refs in version order, the
+    *    fold input of [[constraintsFor]];
+    *  - `zmaps`: the zone-map sidecar refs a surviving entry or the
+    *    checkpoint carries, existence-filtered on first use ([[vacuum]]
+    *    reclaims maps whose data files are gone; a missing map
+    *    degrades to a conservative unpruned read, never an error), and
+    *    `zones`, their decoded rows — a Spark job run at most once per
+    *    snapshot and only for callers that read stats.
+    * `version` is -1 for a fresh table with no log: every projection
+    * is then empty, and [[committed]] refuses it. */
+  final class Snapshot private[TableLog] (spark: SparkSession,
+      val root: String, val version: Long,
+      val filesWithMeta: Seq[(String, String)], val deletes: Seq[String],
+      zmapRefs: Seq[String], val schemaRef: Option[String],
+      val checkRefs: Seq[String]) {
+    lazy val files: Seq[String] = filesWithMeta.map(_._1)
 
-  /** The active file set at `asOf` WITH each file's commit-time
-    * metadata string ([[LogEntry.addMeta]] format; `-` = unknown —
-    * pre-format entries or a writer that could not stat). Same replay
-    * and the same ordering as [[activeFiles]]; this is the zero-stat
-    * planning path [[TableLogFileIndex]] builds from. */
-  private[operators] def activeFilesWithMeta(spark: SparkSession,
-      root: String, asOf: Option[Long] = None): Seq[(String, String)] = {
+    /** This snapshot, or a loud failure for a table with no log. */
+    def committed: Snapshot = {
+      require(version >= 0, s"TableLog: no committed version at $root")
+      this
+    }
+
+    lazy val zmaps: Seq[String] = {
+      val f = fs(spark, root)
+      zmapRefs.distinct.filter(rel => f.exists(new Path(resolve(root, rel))))
+    }
+
+    lazy val zones: Array[ZStat] = readZoneRows(spark, root, zmaps)
+
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      schemaRef.map(readSchemaFile(fs(spark, root), root, _))
+
+    /** A parquet reader applying the in-force schema, if any. */
+    def reader: org.apache.spark.sql.DataFrameReader =
+      schema.fold(spark.read)(st => spark.read.schema(st))
+
+    /** `df` minus the ids the in-force delete sidecars name — a
+      * left-anti join against their (small) union on `idCol`. Without
+      * `idCol` a table with sidecars refuses rather than silently
+      * over-reading; `face` names the caller in that error. */
+    def withoutDeleted(df: DataFrame, idCol: Option[String],
+                       face: String): DataFrame =
+      if (deletes.isEmpty) df
+      else idCol match {
+        case None => sys.error(
+          s"$face: $root has delete sidecars; pass idCol to apply them")
+        case Some(id) =>
+          val doomed = spark.read.parquet(deletes.map(resolve(root, _)): _*)
+          df.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
+            Seq(id), "left_anti")
+      }
+  }
+
+  /** REPLAY the log at `asOf` (default: latest) into its [[Snapshot]]:
+    * the plan ([[replayPlan]]) once, the checkpoint and each later
+    * entry read once, every projection folded in the same pass. */
+  private[graft] def replay(spark: SparkSession, root: String,
+                            asOf: Option[Long] = None): Snapshot = {
     val f = fs(spark, root)
-    val (cp, replay) = replayPlan(f, root, asOf)
-    // LinkedHashMap: re-adding an existing path keeps its position,
-    // matching the LinkedHashSet order semantics this replay always had
+    val (cpV, entryVs) = replayPlan(f, root, asOf)
+    val cp = cpV.map(readCheckpoint(f, root, _))
+    val entries = entryVs.map(v => readEntry(f, entryPath(root, v)))
+    // LinkedHashMap: re-adding an existing path keeps its position
     val active = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def fold(files: Seq[String], meta: Seq[String]): Unit = {
-      val ms = if (meta.length == files.length) meta
-               else files.map(_ => "-")
+      val ms = if (meta.length == files.length) meta else files.map(_ => "-")
       files.zip(ms).foreach { case (p, m) => active(p) = m }
     }
-    cp.foreach { cv =>
-      val c = readCheckpoint(f, root, cv); fold(c.files, c.filesMeta)
-    }
-    replay.foreach { v =>
-      val e = readEntry(f, entryPath(root, v))
+    cp.foreach(c => fold(c.files, c.filesMeta))
+    entries.foreach { e =>
       e.remove.foreach(active -= _)
       fold(e.add, e.addMeta)
     }
-    active.toSeq
+    val lastReset = entries.lastIndexWhere(_.reset)
+    val deletes =
+      if (lastReset >= 0) entries.drop(lastReset).flatMap(_.deletes)
+      else cp.toSeq.flatMap(_.deletes) ++ entries.flatMap(_.deletes)
+    new Snapshot(spark, root, entryVs.lastOption.orElse(cpV).getOrElse(-1L),
+      active.toSeq, deletes,
+      cp.toSeq.flatMap(_.zmap) ++ entries.flatMap(_.zmap),
+      entries.flatMap(_.schema.headOption).lastOption
+        .orElse(cp.flatMap(_.schema)),
+      cp.toSeq.flatMap(_.checks) ++ entries.flatMap(_.checks))
   }
 
-  /** The delete-sidecar files (root-relative) in force at `asOf` —
-    * cumulative since the last deletes-RESET at or before `asOf`
-    * ([[compactTable]] emits the reset after materializing the
-    * survivors, which is what makes sidecars reclaimable). A
-    * checkpoint's delete list is already net of resets at its
-    * version; a reset AFTER the checkpoint drops it. */
+  /** The ACTIVE file set (root-relative) at `asOf` (default: latest). */
+  def activeFiles(spark: SparkSession, root: String,
+                  asOf: Option[Long] = None): Seq[String] =
+    replay(spark, root, asOf).committed.files
+
+  /** The delete-sidecar files (root-relative) in force at `asOf`. */
   def activeDeletes(spark: SparkSession, root: String,
-                    asOf: Option[Long] = None): Seq[String] = {
-    val f = fs(spark, root)
-    if (versions(spark, root).isEmpty && checkpoints(f, root).isEmpty)
-      return Seq.empty
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val later = replay.map(v => readEntry(f, entryPath(root, v)))
-    val lastReset = later.filter(_.reset).map(_.version).sorted.lastOption
-    lastReset match {
-      case Some(r) => later.filter(_.version >= r).flatMap(_.deletes)
-      case None =>
-        cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).deletes) ++
-          later.flatMap(_.deletes)
-    }
-  }
+                    asOf: Option[Long] = None): Seq[String] =
+    replay(spark, root, asOf).deletes
 
   /** ROW-LEVEL delete without rewriting a single data file — the
     * deletion-vector idea at id granularity: the doomed ids land as a
@@ -770,16 +827,12 @@ object TableLog {
     // list, and the conflict expectation must all describe the same
     // log state, or a commit racing between two un-pinned reads
     // slips through the guard
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.compactTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
-    val current = snapshot(spark, root, Some(readV), Some(idCol))
-    val fresh = stageWrite(current, root, name)
+    val s = replay(spark, root).committed
+    val fresh = stageWrite(read(spark, s, Some(idCol)), root, name)
     commit(spark, root, add = fresh,
-      remove = readFiles, resetDeletes = true, op = Some("COMPACT"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      remove = s.files, resetDeletes = true, op = Some("COMPACT"),
+      expectActive = s.files, expectDeletes = Some(s.deletes),
+      expectNoConflictingAdds = Some((s.version, _ => true)))
   }
 
   /** OPTIMIZE: [[compactTable]] that lands the survivors
@@ -809,19 +862,15 @@ object TableLog {
                     statsCols: Seq[String] = Nil,
                     zorderWith: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.optimizeTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
-    val current = snapshot(spark, root, Some(readV), Some(idCol))
+    val s = replay(spark, root).committed
+    val current = read(spark, s, Some(idCol))
     // a full rewrite must not LOSE stats coverage: re-declare every
     // column the outgoing generation's zone rows covered (the same
     // rule as the deleteWhere/replaceWhere boundary rewrites), plus
     // any newly requested statsCols
-    val zonesRead = collectZoneRows(spark, root, Some(readV))
-    val inherited = rewriteStatsCols(zonesRead, readFiles, keyCol,
+    val inherited = rewriteStatsCols(s.zones, s.files, keyCol,
       current.columns.toSeq)
-    val inheritedSketch = rewriteSketchCols(zonesRead, readFiles,
+    val inheritedSketch = rewriteSketchCols(s.zones, s.files,
       current.columns.toSeq)
     val cluster = zorderWith.flatMap { y =>
       // quantization bounds: one bounded 1-row collect (metadata-
@@ -857,10 +906,10 @@ object TableLog {
       statsCols = (inherited ++ statsCols ++ zorderWith).distinct,
       clusterBy = cluster, sketchCols = inheritedSketch)
     commit(spark, root, add = files,
-      remove = readFiles, resetDeletes = true, zmap = zm,
+      remove = s.files, resetDeletes = true, zmap = zm,
       op = Some("OPTIMIZE"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectActive = s.files, expectDeletes = Some(s.deletes),
+      expectNoConflictingAdds = Some((s.version, _ => true)))
   }
 
   /** INCREMENTAL SMALL-FILE COMPACTION — the bin-packing half of
@@ -898,26 +947,23 @@ object TableLog {
       s"TableLog.compactSmallFiles: targetBytes must be positive, got $targetBytes")
     val threshold = minFileBytes.getOrElse(math.max(1L, targetBytes / 2))
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.compactSmallFiles: empty log at $root"))
+    val s = replay(spark, root).committed
     val sized: Seq[(String, Long)] =
-      activeFilesWithMeta(spark, root, Some(readV)).map { case (p, m) =>
+      s.filesWithMeta.map { case (p, m) =>
         p -> parseFileMeta(m).map(_._1).getOrElse(
           f.getFileStatus(new Path(resolve(root, p))).getLen)
       }
     val candidates = sized.filter(_._2 < threshold)
-    if (candidates.length < 2) return readV
+    if (candidates.length < 2) return s.version
     val candidatePaths = candidates.map(_._1)
-    val zones = collectZoneRows(spark, root, Some(readV))
+    val zones = s.zones
     val candidateSet = candidatePaths.toSet
     val hasStats = zones.exists(z => candidateSet(z.file))
     require(!hasStats || keyCol.isDefined,
       s"TableLog.compactSmallFiles: candidates at $root carry zone-map " +
         "stats — pass keyCol so the rewrite re-clusters and re-declares " +
         "them (silently dropping stats would degrade every later read)")
-    val reader = logSchema(spark, root, Some(readV))
-      .fold(spark.read)(st => spark.read.schema(st))
-    val rows = reader.parquet(candidatePaths.map(resolve(root, _)): _*)
+    val rows = s.reader.parquet(candidatePaths.map(resolve(root, _)): _*)
     val parts = math.max(1L,
       (candidates.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
     val (files, zm) = keyCol match {
@@ -952,40 +998,19 @@ object TableLog {
                   schema: org.apache.spark.sql.types.StructType): String =
     stageJsonSidecar(fs(spark, root), root, "schema", name, schema.json)
 
-  /** The schema ref in force at `asOf`: the LAST schema-carrying
-    * commit at or before it (checkpoints fold the in-force ref, so
-    * evolution survives log expiry). None = pre-evolution table
-    * (readers take the files' own uniform schema). */
-  def activeSchemaRef(spark: SparkSession, root: String,
-                      asOf: Option[Long] = None): Option[String] = {
-    val f = fs(spark, root)
-    // never-evolved fast path: every snapshot consults the schema, so
-    // a table without a schema/ dir must answer in ONE exists() call,
-    // not an O(#commits) log replay (stageSchema creates the dir
-    // before any entry can reference a ref, so absent dir ⇒ no ref)
-    if (!f.exists(new Path(s"$root/schema"))) return None
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return None
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val later = replay
-      .flatMap(v => readEntry(f, entryPath(root, v)).schema.headOption)
-    later.lastOption.orElse(
-      cp.flatMap(cv => readCheckpoint(f, root, cv).schema))
-  }
-
   private def readSchemaFile(f: FileSystem, root: String,
                              rel: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType
       .fromJson(readFully(f, new Path(resolve(root, rel))))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** The schema in force at `asOf`, or None for a pre-evolution
-    * table. */
+  /** The schema in force at `asOf` (the LAST schema-carrying commit
+    * at or before it — checkpoints fold the in-force ref, so evolution
+    * survives log expiry), or None for a pre-evolution table. */
   def logSchema(spark: SparkSession, root: String,
                 asOf: Option[Long] = None
                ): Option[org.apache.spark.sql.types.StructType] =
-    activeSchemaRef(spark, root, asOf)
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
+    replay(spark, root, asOf).schema
 
   /** CHECK CONSTRAINTS (the Delta `ALTER TABLE ADD CONSTRAINT CHECK`
     * shape): a named boolean SQL expression every row of every
@@ -1003,28 +1028,17 @@ object TableLog {
     * unvalidated). Raw [[commit]] does not re-validate (the protocol
     * trusts checked writers — same as Delta); constraints are
     * table-level metadata, so [[restoreTable]] leaves them in force
-    * (a restore undoes DATA, not the rules guarding future writes). */
-  /** The constraint-change refs readable at `asOf`, in version order
-    * (the fold input of [[activeConstraints]], and the read-set a
-    * [[checkedAppend]] pins via [[commit]]'s `expectChecks`). */
-  private def activeCheckRefs(f: FileSystem, root: String,
-                              asOf: Option[Long]): Seq[String] = {
-    if (!f.exists(new Path(s"$root/constraints"))) return Seq.empty
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return Seq.empty
-    val (cp, replay) = replayPlan(f, root, asOf)
-    cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).checks) ++
-      replay.flatMap(v => readEntry(f, entryPath(root, v)).checks)
-  }
-
-  /** The constraint-change refs in force (public form of the fold
-    * input): the read-set an external checked writer — e.g.
+    * (a restore undoes DATA, not the rules guarding future writes).
+    *
+    * [[constraintRefs]] are the constraint-change refs at `asOf`, in
+    * version order: the fold input of [[activeConstraints]], and the
+    * read-set a checked writer — [[checkedAppend]],
     * [[graft.streaming.CheckedIngest]] — pins via [[commit]]'s
     * `expectChecks` so its validation can't go stale between split
     * and claim. */
   def constraintRefs(spark: SparkSession, root: String,
                      asOf: Option[Long] = None): Seq[String] =
-    activeCheckRefs(fs(spark, root), root, asOf)
+    replay(spark, root, asOf).checkRefs
 
   /** Fold an explicit ref list into the in-force name→expr map — the
     * refs-first form lets a checked writer read the log ONCE (refs
@@ -1047,8 +1061,7 @@ object TableLog {
 
   def activeConstraints(spark: SparkSession, root: String,
                         asOf: Option[Long] = None): Map[String, String] =
-    constraintsFor(spark, root,
-      activeCheckRefs(fs(spark, root), root, asOf))
+    constraintsFor(spark, root, constraintRefs(spark, root, asOf))
 
   /** The version whose entry carries idempotence tag `tag`, if its
     * entry is still live (expired entries' tags survive only in the
@@ -1100,13 +1113,12 @@ object TableLog {
       s"TableLog.addCheckConstraint: no double quotes in expr ($expr) — " +
         "use SQL single quotes for string literals")
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.addCheckConstraint: empty log at $root"))
+    val s = replay(spark, root).committed
     // the SAME three-valued rule as checkedAppend: a NULL evaluation
     // is NOT satisfied, so existing NULL-evaluating rows refuse the
     // declaration (else the table would sit committed in a state its
     // own checked writes are refused for)
-    val bad = snapshot(spark, root, Some(readV), idCol)
+    val bad = read(spark, s, idCol)
       .filter(not(coalesce(sqlExpr(expr).cast("boolean"), lit(false))))
       .limit(1).collect()
     require(bad.isEmpty,
@@ -1120,8 +1132,8 @@ object TableLog {
     // slip past it either
     commit(spark, root, add = Nil, remove = Nil, checks = Seq(rel),
       op = Some("ADD_CONSTRAINT"),
-      expectDeletes = Some(activeDeletes(spark, root, Some(readV))),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectDeletes = Some(s.deletes),
+      expectNoConflictingAdds = Some((s.version, _ => true)))
   }
 
   /** Retire constraint `cname` (future checked writes stop enforcing
@@ -1150,7 +1162,7 @@ object TableLog {
     // is validated against) and the `expectChecks` pin (what the
     // commit requires unchanged) — reading them twice could validate
     // against a newer set than the pin and conflict spuriously
-    val readRefs = activeCheckRefs(fs(spark, root), root, None)
+    val readRefs = constraintRefs(spark, root)
     val cs = constraintsFor(spark, root, readRefs).toSeq.sortBy(_._1)
     if (cs.nonEmpty) {
       val counts = df.select(cs.map { case (n, e) =>
@@ -1186,15 +1198,12 @@ object TableLog {
     // evolutions would otherwise each widen the SAME base and the
     // later commit would silently hide the earlier one's columns —
     // the commit conflicts (expectSchema) instead
-    val refAtRead = activeSchemaRef(spark, root)
-    val cur = refAtRead
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
-      .getOrElse {
-        val files = activeFiles(spark, root)
-        require(files.nonEmpty,
-          s"TableLog.evolveAppend: $root has no active files to evolve from")
-        spark.read.parquet(files.map(resolve(root, _)): _*).schema
-      }
+    val s = replay(spark, root)
+    val cur = s.schema.getOrElse {
+      require(s.files.nonEmpty,
+        s"TableLog.evolveAppend: $root has no active files to evolve from")
+      spark.read.parquet(s.files.map(resolve(root, _)): _*).schema
+    }
     val byName = cur.map(fld => fld.name -> fld).toMap
     df.schema.foreach { fld =>
       byName.get(fld.name).foreach { old =>
@@ -1217,7 +1226,7 @@ object TableLog {
     val files = stageWrite(df, root, name)
     commit(spark, root, add = files, remove = Nil,
       cdf = cdf, tag = tag, schema = schemaSeq,
-      op = Some("EVOLVE_APPEND"), expectSchema = Some(refAtRead))
+      op = Some("EVOLVE_APPEND"), expectSchema = Some(s.schemaRef))
   }
 
   /** ALTER TABLE ADD COLUMNS — [[evolveAppend]]'s schema widening
@@ -1237,16 +1246,13 @@ object TableLog {
                  name: String = "alter",
                  tag: Option[String] = None): Long = {
     require(cols.nonEmpty, "TableLog.addColumns: no columns to add")
-    val refAtRead = activeSchemaRef(spark, root)
-    val cur = refAtRead
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
-      .getOrElse {
-        val files = activeFiles(spark, root)
-        require(files.nonEmpty,
-          s"TableLog.addColumns: $root has no schema ref and no active " +
-            "files — nothing to derive the current schema from")
-        spark.read.parquet(files.map(resolve(root, _)): _*).schema
-      }
+    val s = replay(spark, root)
+    val cur = s.schema.getOrElse {
+      require(s.files.nonEmpty,
+        s"TableLog.addColumns: $root has no schema ref and no active " +
+          "files — nothing to derive the current schema from")
+      spark.read.parquet(s.files.map(resolve(root, _)): _*).schema
+    }
     // CASE-INSENSITIVE collision check (Delta's rule): Spark resolves
     // case-insensitively by default, so committing both `text` and
     // `TEXT` would make every later SELECT fail AMBIGUOUS_REFERENCE —
@@ -1262,7 +1268,7 @@ object TableLog {
       cur ++ cols.map(_.copy(nullable = true)))
     commit(spark, root, add = Nil, remove = Nil, tag = tag,
       schema = Seq(stageSchema(spark, root, name, merged)),
-      op = Some("ADD_COLUMNS"), expectSchema = Some(refAtRead))
+      op = Some("ADD_COLUMNS"), expectSchema = Some(s.schemaRef))
   }
 
   /** TRUNCATE: remove every active row as ONE metadata commit — the
@@ -1276,14 +1282,11 @@ object TableLog {
     * silently deleting them. Returns the new version. */
   def truncateTable(spark: SparkSession, root: String,
                     tag: Option[String] = None): Long = {
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.truncateTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
-    commit(spark, root, add = Nil, remove = readFiles,
+    val s = replay(spark, root).committed
+    commit(spark, root, add = Nil, remove = s.files,
       resetDeletes = true, tag = tag, op = Some("TRUNCATE"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectActive = s.files, expectDeletes = Some(s.deletes),
+      expectNoConflictingAdds = Some((s.version, _ => true)))
   }
 
   /** RESTORE: roll the table BACK to the content of version `toV` as
@@ -1302,27 +1305,24 @@ object TableLog {
   def restoreTable(spark: SparkSession, root: String, toV: Long,
                    tag: Option[String] = None): Long = {
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.restoreTable: empty log at $root"))
-    require(toV <= readV,
-      s"TableLog.restoreTable: version $toV is not committed (latest $readV)")
-    val target = activeFiles(spark, root, Some(toV))
-    val targetDels = activeDeletes(spark, root, Some(toV))
+    val cur = replay(spark, root).committed
+    require(toV <= cur.version,
+      s"TableLog.restoreTable: version $toV is not committed (latest ${cur.version})")
+    val to = replay(spark, root, Some(toV))
+    val target = to.files
     // the restored head must be FULLY servable: data files, delete
     // sidecars, AND the schema ref it re-declares — vacuum keeps only
     // the refs retained versions read, so any of the three can be
     // gone (a superseded schema ref included)
-    val targetSchema = activeSchemaRef(spark, root, Some(toV))
-    val missing = (target ++ targetDels ++ targetSchema)
+    val missing = (target ++ to.deletes ++ to.schemaRef)
       .filterNot(rel => f.exists(new Path(resolve(root, rel))))
     require(missing.isEmpty,
       s"TableLog.restoreTable: version $toV is not restorable — vacuum " +
         s"reclaimed ${missing.size} of its files (e.g. ${missing.head})")
-    val current = activeFiles(spark, root, Some(readV))
-    val currentDels = activeDeletes(spark, root, Some(readV))
-    val schemaSeq = targetSchema match {
+    val current = cur.files
+    val schemaSeq = to.schemaRef match {
       case Some(ref) => Seq(ref) // re-declare toV's ref (last one wins)
-      case None if activeSchemaRef(spark, root, Some(readV)).isDefined =>
+      case None if cur.schemaRef.isDefined =>
         // rolling back PAST an evolution: the format has no schema
         // tombstone, so re-declare toV's file schema explicitly or the
         // post-toV evolution's ref would stay in force and the
@@ -1335,7 +1335,7 @@ object TableLog {
         // raw path error from inside the commit
         val srcFiles = (
           if (target.nonEmpty) target
-          else lastNonEmptyFiles(spark, root, Some(toV)).getOrElse(
+          else lastNonEmptyFiles(spark, root, toV).getOrElse(
             sys.error(
               s"TableLog.restoreTable: no non-empty version at or " +
                 s"before $toV to derive the pre-evolution schema from"))
@@ -1352,22 +1352,22 @@ object TableLog {
     commit(spark, root,
       add = target.filterNot(current.toSet),
       remove = current.filterNot(target.toSet),
-      deletes = targetDels, resetDeletes = true, op = Some("RESTORE"),
+      deletes = to.deletes, resetDeletes = true, op = Some("RESTORE"),
       tag = tag, schema = schemaSeq,
-      expectActive = current, expectDeletes = Some(currentDels),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectActive = current, expectDeletes = Some(cur.deletes),
+      expectNoConflictingAdds = Some((cur.version, _ => true)))
   }
 
   /** The active file set of the most recent non-empty version at or
     * before `upTo` — the empty-snapshot schema fallback shared by
-    * [[snapshot]] and [[restoreTable]]. */
-  private def lastNonEmptyFiles(spark: SparkSession, root: String,
-                                upTo: Option[Long]): Option[Seq[String]] = {
-    val vs = versions(spark, root)
-    upTo.fold(vs)(v => vs.filter(_ <= v)).reverse
-      .map(v => activeFiles(spark, root, Some(v)))
+    * [[snapshot]], [[TableLogRelation.relationAt]] and
+    * [[restoreTable]]. Walks back from `upTo`, one replay per version,
+    * and stops at the first non-empty one. */
+  private[operators] def lastNonEmptyFiles(spark: SparkSession,
+      root: String, upTo: Long): Option[Seq[String]] =
+    versions(spark, root).filter(_ <= upTo).reverseIterator
+      .map(v => replay(spark, root, Some(v)).files)
       .find(_.nonEmpty)
-  }
 
   /** TIME-TRAVEL read: the table exactly as of version `asOf`
     * (default: latest). Reads only the log plus the active files —
@@ -1383,30 +1383,28 @@ object TableLog {
     * null-fill columns they predate. */
   def snapshot(spark: SparkSession, root: String,
                asOf: Option[Long] = None,
-               idCol: Option[String] = None): DataFrame = {
-    val files = activeFiles(spark, root, asOf).map(resolve(root, _))
-    val declared = logSchema(spark, root, asOf)
-    val reader = declared.fold(spark.read)(st => spark.read.schema(st))
+               idCol: Option[String] = None): DataFrame =
+    read(spark, replay(spark, root, asOf).committed, idCol)
+
+  /** [[snapshot]] of an already-replayed [[Snapshot]]. */
+  private def read(spark: SparkSession, s: Snapshot,
+                   idCol: Option[String]): DataFrame = {
+    val root = s.root
     val base =
-      if (files.nonEmpty) reader.parquet(files: _*)
-      else {
+      if (s.files.nonEmpty) s.reader.parquet(s.files.map(resolve(root, _)): _*)
+      else s.schema match {
         // legal state (a full-purge commit): serve the empty frame
-        // with the schema of the most recent non-empty version
-        val lastNonEmpty = lastNonEmptyFiles(spark, root, asOf)
-          .getOrElse(sys.error(
-            s"TableLog: $root has no non-empty version at or before $asOf"))
-        reader.parquet(resolve(root, lastNonEmpty.head)).limit(0)
+        // with the schema in force, else with the schema of the most
+        // recent non-empty version
+        case Some(st) =>
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), st)
+        case None =>
+          val lastNonEmpty = lastNonEmptyFiles(spark, root, s.version)
+            .getOrElse(sys.error(s"TableLog: $root has no non-empty " +
+              s"version at or before ${s.version}"))
+          spark.read.parquet(resolve(root, lastNonEmpty.head)).limit(0)
       }
-    val dels = activeDeletes(spark, root, asOf)
-    if (dels.isEmpty) base
-    else idCol match {
-      case None => sys.error(
-        s"TableLog.snapshot: $root has delete sidecars; pass idCol to apply them")
-      case Some(id) =>
-        val doomed = spark.read.parquet(dels.map(resolve(root, _)): _*)
-        base.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
+    s.withoutDeleted(base, idCol, "TableLog.snapshot")
   }
 
   /** Write `df` as new immutable data files under a FRESH
@@ -1552,12 +1550,11 @@ object TableLog {
                 nBuckets: Int, name: String,
                 tag: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(activeDeletes(spark, root).isEmpty,
+    val s = replay(spark, root).committed
+    require(s.deletes.isEmpty,
       s"TableLog.mergeInto: $root has delete sidecars in force — " +
         "compactTable first so merge reads files, not filtered views")
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.mergeInto: empty log at $root"))
-    val active = activeFiles(spark, root, Some(readV))
+    val active = s.files
     val untagged = active.filterNot(bucketOf(_).isDefined)
     require(untagged.isEmpty,
       s"TableLog.mergeInto: un-bucketed active files at $root " +
@@ -1577,7 +1574,7 @@ object TableLog {
     // hiding behind a raw path list, and any zone stats compose
     val base =
       if (oldTouched.isEmpty) upserts.limit(0)
-      else TableLogRelation.snapshotDf(spark, root, Some(readV),
+      else TableLogRelation.snapshotDfOf(spark, s,
         onlyBuckets = Some(touched))
     val merged = base.join(doomedIds, Seq(idCol), "left_anti")
       .unionByName(upserts)
@@ -1594,7 +1591,7 @@ object TableLog {
       op = Some("MERGE"),
       expectActive = oldTouched, expectDeletes = Some(Nil),
       expectNoConflictingAdds =
-        Some((readV, p => bucketOf(p).forall(touched))))
+        Some((s.version, p => bucketOf(p).forall(touched))))
   }
 
   /** The TYPED-stats kind tag for a column, or None when the type has
@@ -1754,12 +1751,11 @@ object TableLog {
                            insertSet: Map[String, String] = Map.empty,
                            tag: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(activeDeletes(spark, root).isEmpty,
+    val s = replay(spark, root).committed
+    require(s.deletes.isEmpty,
       s"TableLog.mergeIntoConditional: $root has delete sidecars in force — " +
         "compactTable first so merge reads files, not filtered views")
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.mergeIntoConditional: empty log at $root"))
-    val active = activeFiles(spark, root, Some(readV))
+    val active = s.files
     val untagged = active.filterNot(bucketOf(_).isDefined)
     require(untagged.isEmpty,
       s"TableLog.mergeIntoConditional: un-bucketed active files at $root " +
@@ -1793,9 +1789,8 @@ object TableLog {
     val (oldTouched, _) = active.partition(p => bucketOf(p).exists(touched))
     // same pinned, bucket-restricted relation as mergeInto's read-back
     val base =
-      if (oldTouched.isEmpty)
-        snapshot(spark, root, Some(readV)).limit(0)
-      else TableLogRelation.snapshotDf(spark, root, Some(readV),
+      if (oldTouched.isEmpty) read(spark, s, None).limit(0)
+      else TableLogRelation.snapshotDfOf(spark, s,
         onlyBuckets = Some(touched))
     val cols = base.columns.toSeq
     (matched.collect { case MatchedUpdate(_, set) => set.keys }.flatten ++
@@ -1842,7 +1837,7 @@ object TableLog {
       op = Some("MERGE"),
       expectActive = oldTouched, expectDeletes = Some(Nil),
       expectNoConflictingAdds =
-        Some((readV, p => bucketOf(p).forall(touched))))
+        Some((s.version, p => bucketOf(p).forall(touched))))
   }
 
   /** Stage `df` RANGE-CLUSTERED on `keyCol` WITH a TYPED ZONE-MAP
@@ -1986,31 +1981,6 @@ object TableLog {
     (files, stageUnder(melted, root, "zmap", name))
   }
 
-  /** RANGE read with ZONE-MAP file skipping: the snapshot at `asOf`
-    * restricted to `lo <= keyCol <= hi`, reading ONLY the files whose
-    * zone-map interval intersects [lo, hi] — files committed with a
-    * [[stageWithZoneMap]] sidecar prune by metadata; files committed
-    * without one are conservatively read (correctness never depends
-    * on stats coverage). The zone-map join is O(#files) driver
-    * metadata — the same order as the active-file list itself. Pass
-    * `idCol` to apply delete sidecars exactly as [[snapshot]] does.
-    * The in-range residual filter is still applied (zone pruning is
-    * file-granular); Catalyst additionally pushes it into each
-    * surviving file's row groups. */
-  /** The zone-map sidecar refs readable at `asOf` — every zmap ref a
-    * surviving entry or checkpoint carries, existence-filtered
-    * ([[vacuum]] reclaims maps whose data files are all gone; a
-    * missing map degrades to a conservative unpruned read, never an
-    * error). Shared by [[rangeTouchedFiles]] and [[cloneTable]]. */
-  private def inForceZmaps(f: FileSystem, root: String,
-                           asOf: Option[Long]): Seq[String] = {
-    val (cp, replay) = replayPlan(f, root, asOf)
-    (cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).zmap) ++
-        replay.flatMap(v => readEntry(f, entryPath(root, v)).zmap))
-      .distinct
-      .filter(rel => f.exists(new Path(resolve(root, rel))))
-  }
-
   /** One parsed zone-stats row: which file, which column (None for
     * the PRE-TYPED sidecar format, which recorded no column name —
     * the caller's key discipline was its contract), the value kind,
@@ -2027,22 +1997,13 @@ object TableLog {
                                  sum: Option[String] = None,
                                  hll: Option[String] = None)
 
-  /** One collected read of the in-force zone-map sidecars at `asOf`,
-    * both formats (mergeSchema unions their disjoint column sets:
-    * legacy rows carry long lo/hi, typed rows carry scol/kind +
-    * string lo_s/hi_s). O(#files × #statsCols) driver metadata —
-    * shared by [[rangeTouchedFiles]] and [[deleteWhere]] so one purge
-    * plans from ONE sidecar read. */
-  private[operators] def collectZoneRows(spark: SparkSession, root: String,
-                              asOf: Option[Long]): Array[ZStat] =
-    collectZoneRowsFrom(spark, root,
-      inForceZmaps(fs(spark, root), root, asOf))
-
-  /** [[collectZoneRows]] over a PRE-RESOLVED in-force zmap ref list —
-    * the [[replayState]] composition path, so one replay serves both
-    * the ref discovery and this read. */
-  private def collectZoneRowsFrom(spark: SparkSession, root: String,
-                                  zmaps: Seq[String]): Array[ZStat] = {
+  /** One collected read of the zone-map sidecars `zmaps` — a
+    * [[Snapshot]]'s `zones`, both formats (mergeSchema unions their
+    * disjoint column sets: legacy rows carry long lo/hi, typed rows
+    * carry scol/kind + string lo_s/hi_s). O(#files × #statsCols)
+    * driver metadata, read at most once per snapshot. */
+  private def readZoneRows(spark: SparkSession, root: String,
+                           zmaps: Seq[String]): Array[ZStat] = {
     if (zmaps.isEmpty) Array.empty
     else {
       val zm = spark.read.option("mergeSchema", "true")
@@ -2066,42 +2027,6 @@ object TableLog {
             ZStat(r.getString(0), None, "long", s(5), s(6), l(7), l(8))
         }
     }
-  }
-
-  /** ONE log replay serving every projection the metadata faces need
-    * — active files, in-force delete sidecars, in-force zmap refs —
-    * reading each retained entry ONCE. [[metadataDistinct]] /
-    * [[metadataDistinctRange]] / [[metadataProfile]] previously
-    * composed [[activeDeletes]] + [[activeFiles]] +
-    * [[collectZoneRows]], each replaying the log independently: ~3×
-    * the listStatus/open round-trips per probe on a path whose whole
-    * point is O(metadata) cost. Folds mirror [[activeFilesWithMeta]],
-    * [[activeDeletes]] and [[inForceZmaps]] exactly. */
-  private def replayState(spark: SparkSession, root: String,
-                          asOf: Option[Long])
-      : (Seq[String], Seq[String], Seq[String]) = {
-    val f = fs(spark, root)
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return (Nil, Nil, Nil)
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val cpData = cp.map(cv => readCheckpoint(f, root, cv))
-    val entries = replay.map(v => readEntry(f, entryPath(root, v)))
-    val active = scala.collection.mutable.LinkedHashSet.empty[String]
-    cpData.foreach(_.files.foreach(active += _))
-    entries.foreach { e =>
-      e.remove.foreach(active -= _)
-      e.add.foreach(active += _)
-    }
-    val lastReset = entries.filter(_.reset).map(_.version).sorted.lastOption
-    val dels = lastReset match {
-      case Some(r) => entries.filter(_.version >= r).flatMap(_.deletes)
-      case None =>
-        cpData.toSeq.flatMap(_.deletes) ++ entries.flatMap(_.deletes)
-    }
-    val zmaps = (cpData.toSeq.flatMap(_.zmap) ++ entries.flatMap(_.zmap))
-      .distinct
-      .filter(rel => f.exists(new Path(resolve(root, rel))))
-    (active.toSeq, dels, zmaps)
   }
 
   /** Merge one serialized HLL bank into `merged` by elementwise max.
@@ -2187,10 +2112,10 @@ object TableLog {
                        cols: Seq[String],
                        asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
-    val activeSet = active.toSet
+    val s = replay(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val zones = s.zones
+    val activeSet = s.files.toSet
     val m = graft.functions.Sketches.M
     val want = cols.distinct.sorted
     val banks: Seq[(String, Seq[Long])] = want.flatMap { c =>
@@ -2249,16 +2174,16 @@ object TableLog {
     val (kindHi, qhi) = zbound(hi)
     require(kind == kindHi,
       s"TableLog.metadataDistinctRange: bound kinds differ ($kind vs $kindHi)")
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
+    val s = replay(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val (active, zones) = (s.files, s.zones)
     // Both named columns must exist in the table before any planning:
     // cheapest proof first — the declared log schema, then a sidecar
     // row naming the column, then ONE parquet footer (metadata, not
     // data). A column that exists nowhere declines; proceeding would
     // either throw an AnalysisException from the boundary scan or,
     // on a fully-file-aligned empty window, silently estimate 0.
-    val declared = logSchema(spark, root, asOf).map(_.fieldNames.toSet)
+    val declared = s.schema.map(_.fieldNames.toSet)
     lazy val footerCols: Set[String] = active.headOption.map { p =>
       spark.read.parquet(resolve(root, p)).schema.fieldNames.toSet
     }.getOrElse(Set.empty)
@@ -2296,9 +2221,7 @@ object TableLog {
     }
     val scanSet = scanBuilder.result()
     if (scanSet.nonEmpty) {
-      val reader = logSchema(spark, root, asOf)
-        .fold(spark.read)(st => spark.read.schema(st))
-      val bank = reader.parquet(scanSet.map(resolve(root, _)): _*)
+      val bank = s.reader.parquet(scanSet.map(resolve(root, _)): _*)
         .filter(col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi))
         .select(graft.plans.HllRegisters.hllRegisters(
           graft.functions.Sketches.bucketRho(col(sketchCol)),
@@ -2349,13 +2272,13 @@ object TableLog {
     require(kind == kindHi,
       s"TableLog.metadataAggRange: bound kinds differ ($kind vs $kindHi)")
     require(cols.nonEmpty, "TableLog.metadataAggRange: no columns asked")
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
+    val s = replay(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val (active, zones) = (s.files, s.zones)
     val want = cols.distinct.sorted
     // column validation, cheapest proof first (the metadataDistinctRange
     // rule): declared schema, then sidecar rows, then ONE footer
-    val declared = logSchema(spark, root, asOf)
+    val declared = s.schema
     val declaredNames = declared.map(_.fieldNames.toSet)
     lazy val footerSchema: Option[org.apache.spark.sql.types.StructType] =
       active.headOption.map(p =>
@@ -2419,9 +2342,7 @@ object TableLog {
     val scanRow: Option[org.apache.spark.sql.Row] =
       if (toScan.isEmpty) None
       else {
-        val reader = logSchema(spark, root, asOf)
-          .fold(spark.read)(st => spark.read.schema(st))
-        val windowed = reader.parquet(toScan.map(resolve(root, _)): _*)
+        val windowed = s.reader.parquet(toScan.map(resolve(root, _)): _*)
           .filter(col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi))
         val aggs = want.flatMap { c =>
           val k = kindOf(c)
@@ -2515,11 +2436,10 @@ object TableLog {
   def metadataProfile(spark: SparkSession, root: String,
                       asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val activeSet = active.toSet
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
-      .filter(z => activeSet(z.file) && z.scol.isDefined)
+    val s = replay(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val activeSet = s.files.toSet
+    val zones = s.zones.filter(z => activeSet(z.file) && z.scol.isDefined)
     val m = graft.functions.Sketches.M
     // a bound must PARSE under its kind's comparator before the fold
     // touches it — a foreign row's garbage must skip the column, not
@@ -2830,46 +2750,41 @@ object TableLog {
         if zcmp(kind, l, qlo) >= 0 && zcmp(kind, h, qhi) <= 0 => p }
       .toSet
 
-  private def rangeTouchedFiles(spark: SparkSession, root: String,
-                                keyCol: String, lo: Long, hi: Long,
-                                asOf: Option[Long]): Seq[String] =
-    touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, "long",
-      Some(lo.toString), Some(hi.toString), trustLegacy = true)
-
-  /** Read a PRUNED file subset of the snapshot at `asOf` with a
-    * residual filter — the shared tail of every zone-pruned read
-    * face. Delete sidecars apply exactly as in [[snapshot]]. */
+  /** Read the files of the snapshot at `asOf` that `touched` keeps
+    * (given the active set and zone rows) with a residual filter — the
+    * shared body of every zone-pruned read face. Delete sidecars apply
+    * exactly as in [[snapshot]]. */
   private def readPruned(spark: SparkSession, root: String,
-                         files: Seq[String], residual: org.apache.spark.sql.Column,
-                         asOf: Option[Long], idCol: Option[String],
-                         face: String): DataFrame = {
-    val reader = logSchema(spark, root, asOf)
-      .fold(spark.read)(st => spark.read.schema(st))
+                         asOf: Option[Long],
+                         touched: (Seq[String], Array[ZStat]) => Seq[String],
+                         residual: org.apache.spark.sql.Column,
+                         idCol: Option[String], face: String): DataFrame = {
+    val s = replay(spark, root, asOf).committed
+    val files = touched(s.files, s.zones)
     val base =
-      if (files.isEmpty) snapshot(spark, root, asOf, idCol).limit(0)
-      else reader.parquet(files.map(resolve(root, _)): _*)
-    val ranged = base.filter(residual)
-    val dels = activeDeletes(spark, root, asOf)
-    if (dels.isEmpty) ranged
-    else idCol match {
-      case None => sys.error(
-        s"TableLog.$face: $root has delete sidecars; pass idCol")
-      case Some(id) =>
-        val doomed = spark.read.parquet(dels.map(resolve(root, _)): _*)
-        ranged.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
+      if (files.isEmpty) read(spark, s, idCol).limit(0)
+      else s.reader.parquet(files.map(resolve(root, _)): _*)
+    s.withoutDeleted(base.filter(residual), idCol, s"TableLog.$face")
   }
 
+  /** RANGE read with ZONE-MAP file skipping: the snapshot at `asOf`
+    * restricted to `lo <= keyCol <= hi`, reading ONLY the files whose
+    * zone-map interval intersects [lo, hi] — files committed with a
+    * [[stageWithZoneMap]] sidecar prune by metadata; files committed
+    * without one are conservatively read (correctness never depends
+    * on stats coverage). The zone-map join is O(#files) driver
+    * metadata — the same order as the active-file list itself. Pass
+    * `idCol` to apply delete sidecars exactly as [[snapshot]] does.
+    * The in-range residual filter is still applied (zone pruning is
+    * file-granular); Catalyst additionally pushes it into each
+    * surviving file's row groups. */
   def snapshotRange(spark: SparkSession, root: String, keyCol: String,
                     lo: Long, hi: Long, asOf: Option[Long] = None,
-                    idCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    readPruned(spark, root,
-      rangeTouchedFiles(spark, root, keyCol, lo, hi, asOf),
-      col(keyCol) >= lo && col(keyCol) <= hi, asOf, idCol, "snapshotRange")
-  }
+                    idCol: Option[String] = None): DataFrame =
+    readPruned(spark, root, asOf,
+      touchedFrom(_, _, keyCol, "long", Some(lo.toString),
+        Some(hi.toString), trustLegacy = true),
+      col(keyCol) >= lo && col(keyCol) <= hi, idCol, "snapshotRange")
 
   /** TYPED range read with zone-map file skipping: the snapshot at
     * `asOf` restricted to `lo <= keyCol <= hi` where the bounds are
@@ -2889,11 +2804,10 @@ object TableLog {
     val (kindHi, qhi) = zbound(hi)
     require(kind == kindHi,
       s"TableLog.snapshotWhere: bound kinds differ ($kind vs $kindHi)")
-    val files = touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, kind, Some(qlo), Some(qhi))
-    readPruned(spark, root, files,
+    readPruned(spark, root, asOf,
+      touchedFrom(_, _, keyCol, kind, Some(qlo), Some(qhi)),
       col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi),
-      asOf, idCol, "snapshotWhere")
+      idCol, "snapshotWhere")
   }
 
   /** The smallest string STRICTLY greater than every string with
@@ -2919,20 +2833,16 @@ object TableLog {
     * shape at 100 TB. */
   def snapshotPrefix(spark: SparkSession, root: String, keyCol: String,
                      prefix: String, asOf: Option[Long] = None,
-                     idCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val files = touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, "string",
-      Some(prefix), prefixSucc(prefix))
-    readPruned(spark, root, files,
-      col(keyCol).startsWith(prefix), asOf, idCol, "snapshotPrefix")
-  }
+                     idCol: Option[String] = None): DataFrame =
+    readPruned(spark, root, asOf,
+      touchedFrom(_, _, keyCol, "string", Some(prefix), prefixSucc(prefix)),
+      col(keyCol).startsWith(prefix), idCol, "snapshotPrefix")
 
   /** REPLACE WHERE — atomically overwrite exactly the rows with
     * `lo <= keyCol <= hi` (the Delta `replaceWhere` shape, the
     * idempotent-backfill primitive: "recompute this day/key-range and
     * swap it in"): only files whose zone interval intersects the
-    * range are read ([[rangeTouchedFiles]] — at 100 TB a backfill of
+    * range are read (zone-map pruning — at 100 TB a backfill of
     * one key range rewrites O(selectivity) of the table, not all of
     * it); their OUT-of-range rows survive into a fresh
     * range-clustered, zone-mapped stage together with the
@@ -2985,7 +2895,8 @@ object TableLog {
                                parts: Int, trustLegacy: Boolean,
                                asOf: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(activeDeletes(spark, root).isEmpty,
+    val head = replay(spark, root)
+    require(head.deletes.isEmpty,
       s"TableLog.replaceWhere: $root has delete sidecars in force — " +
         "compactTable first so the rewrite cannot resurrect deleted rows")
     // NULL keys are outside every range: as replacement rows they are
@@ -2997,16 +2908,13 @@ object TableLog {
       s"TableLog.replaceWhere: replacement rows outside [$qlo, $qhi] on " +
         s"'$keyCol' (or with NULL key) — they would widen the " +
         "overwrite beyond the predicate")
-    val readV = asOf.getOrElse(versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.replaceWhere: empty log at $root")))
-    val zones = collectZoneRows(spark, root, Some(readV))
-    val touched = touchedFrom(activeFiles(spark, root, Some(readV)),
-      zones, keyCol, kind, Some(qlo), Some(qhi), trustLegacy)
-    val reader = logSchema(spark, root, Some(readV))
-      .fold(spark.read)(st => spark.read.schema(st))
+    val s = asOf.fold(head)(v => replay(spark, root, Some(v))).committed
+    val zones = s.zones
+    val touched = touchedFrom(s.files, zones, keyCol, kind,
+      Some(qlo), Some(qhi), trustLegacy)
     val survivors =
       if (touched.isEmpty) replacement.limit(0)
-      else reader.parquet(touched.map(resolve(root, _)): _*)
+      else s.reader.parquet(touched.map(resolve(root, _)): _*)
         .filter(col(keyCol).isNull || col(keyCol) < loLit ||
           col(keyCol) > hiLit)
     val (files, zm) = stageWithZoneMap(
@@ -3022,7 +2930,7 @@ object TableLog {
     commit(spark, root, add = files, remove = touched, zmap = zm,
       op = Some("REPLACE_WHERE"),
       expectActive = touched, expectDeletes = Some(Nil),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectNoConflictingAdds = Some((s.version, _ => true)))
   }
 
   /** DELETE WHERE — atomically remove exactly the rows with
@@ -3092,21 +3000,20 @@ object TableLog {
                               trustLegacy: Boolean,
                               emptyWindow: Boolean): Long = {
     import org.apache.spark.sql.functions._
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.deleteWhere: empty log at $root"))
+    val s = replay(spark, root).committed
     // ONE zone-sidecar read plans the whole purge (touched set AND
     // the droppable classification)
-    val zones = collectZoneRows(spark, root, Some(readV))
+    val zones = s.zones
     val touched =
       if (emptyWindow) Seq.empty[String] // an empty window deletes nothing
-      else touchedFrom(activeFiles(spark, root, Some(readV)), zones,
+      else touchedFrom(s.files, zones,
         keyCol, kind, Some(qlo), Some(qhi), trustLegacy)
-    if (touched.isEmpty) readV // provably nothing in range: NO-OP
+    if (touched.isEmpty) s.version // provably nothing in range: NO-OP
     else {
       // the rewrite below would resurrect sidecar-deleted rows; the
       // guard sits AFTER the no-op return so a non-intersecting
       // window stays side-effect-free even with sidecars in force
-      require(activeDeletes(spark, root).isEmpty,
+      require(s.deletes.isEmpty,
         s"TableLog.deleteWhere: $root has delete sidecars in force — " +
           "compactTable first so the rewrite cannot resurrect deleted rows")
       // provably-all-in-range files: interval inside [qlo, qhi] and a
@@ -3116,9 +3023,8 @@ object TableLog {
         droppableFrom(zones, keyCol, kind, qlo, qhi, trustLegacy)
       val rewrite = touched.filterNot(droppable)
       // lazy: an all-droppable purge without a feed must stay pure
-      // metadata — not even the schema-ref replay runs
-      lazy val reader = logSchema(spark, root, Some(readV))
-        .fold(spark.read)(st => spark.read.schema(st))
+      // metadata — not even the schema sidecar is read
+      lazy val reader = s.reader
       val (files, zm) =
         if (rewrite.isEmpty) (Seq.empty[String], Seq.empty[String])
         else {
@@ -3149,7 +3055,7 @@ object TableLog {
       commit(spark, root, add = files, remove = touched, zmap = zm,
         cdf = cdfSeq, op = Some("DELETE_WHERE"),
         expectActive = touched, expectDeletes = Some(Nil),
-        expectNoConflictingAdds = Some((readV, _ => true)))
+        expectNoConflictingAdds = Some((s.version, _ => true)))
     }
   }
 
@@ -3291,11 +3197,10 @@ object TableLog {
     // servable); pre-horizon feeds reclaim with their data files
     val keep = retained.flatMap { v =>
       val e = readEntry(f, entryPath(root, v))
+      val s = replay(spark, root, Some(v))
       // the schema IN FORCE at v may live in a pre-horizon commit —
       // keep it as long as any retained version reads through it
-      activeFiles(spark, root, Some(v)) ++
-        activeDeletes(spark, root, Some(v)) ++ e.cdf ++ e.zmap ++
-        activeSchemaRef(spark, root, Some(v))
+      s.files ++ s.deletes ++ e.cdf ++ e.zmap ++ s.schemaRef
     }.toSet
     // a zone map follows its DATA files: doomed only when every file
     // its commit added is gone from all retained versions (readers
@@ -3599,23 +3504,22 @@ object TableLog {
       s"TableLog.cloneTable: $dstRoot already has a log — clone only " +
         "into a fresh root (the clone's history starts at its v0)")
     val fSrc = fs(spark, srcRoot)
-    val srcV = asOf.getOrElse(versions(spark, srcRoot).lastOption
-      .getOrElse(sys.error(s"TableLog.cloneTable: empty log at $srcRoot")))
+    val src = replay(spark, srcRoot, asOf).committed
     // absolutize the source root once so borrowed refs resolve from
     // the clone's root regardless of the working directory
     val srcAbs = fSrc.makeQualified(new Path(srcRoot)).toUri.getPath
     def borrow(rel: String): String =
       if (rel.startsWith("/")) rel else s"$srcAbs/$rel" // clone-of-clone passes through
-    val files = activeFiles(spark, srcRoot, Some(srcV)).map(borrow)
-    val dels = activeDeletes(spark, srcRoot, Some(srcV)).map(borrow)
+    val files = src.files.map(borrow)
+    val dels = src.deletes.map(borrow)
     // the schema JSON is copied (bytes, not data): the clone must not
     // dangle on a source-side vacuum of a superseded schema ref
-    val schemaSeq = logSchema(spark, srcRoot, Some(srcV))
+    val schemaSeq = src.schema
       .map(st => stageSchema(spark, dstRoot, "clone", st)).toSeq
     // zone maps name their files ROOT-RELATIVE to the source; re-key
     // them to the borrowed absolute refs so snapshotRange prunes on
     // the clone from the first read (O(#files) metadata rewrite)
-    val zmRefs = inForceZmaps(fSrc, srcRoot, Some(srcV))
+    val zmRefs = src.zmaps
     val zmapSeq =
       if (zmRefs.isEmpty) Nil
       else {
@@ -3627,7 +3531,7 @@ object TableLog {
       }
     // constraints carry like the schema: re-stage the FOLDED in-force
     // set as the clone's own sidecars (bytes, not data)
-    val checkSeq = activeConstraints(spark, srcRoot, Some(srcV)).toSeq
+    val checkSeq = constraintsFor(spark, srcRoot, src.checkRefs).toSeq
       .sortBy(_._1).map { case (n, e) =>
         stageConstraint(fDst, dstRoot, s"""{"cname":"$n","expr":"$e"}""")
       }

@@ -40,25 +40,25 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType,
   * depends on the translation). Open bounds are closed conservatively
   * (`x > 5` prunes as `x >= 5`), which can only under-prune.
   *
-  * Scale shape: the index PINS the snapshot version at construction
-  * (asOf = None resolves to the latest committed version THEN — a
-  * concurrent commit between relation build and query execution can
-  * neither drop rows nor mix file generations) and materializes the
-  * active statuses + zone stats once — O(#files) driver metadata, the
-  * same order as the log replay that produced it; each `listFiles`
-  * is then a pure driver-side interval check, no log replay and no
-  * Spark job per planning pass. Row-group pushdown inside surviving
-  * files is unchanged parquet behavior. */
-class TableLogFileIndex(spark: SparkSession, root: String,
-                        asOf: Option[Long],
-                        bucketBy: Option[(String, Int)] = None,
-                        onlyBuckets: Option[Set[Int]] = None)
+  * Scale shape: the index serves ONE [[TableLog.Snapshot]] — the
+  * version is pinned when that snapshot is replayed (asOf = None
+  * resolves to the latest committed version THEN — a concurrent
+  * commit between relation build and query execution can neither drop
+  * rows nor mix file generations) — and materializes the active
+  * statuses + zone stats once — O(#files) driver metadata, the same
+  * order as the log replay that produced it; each `listFiles` is then
+  * a pure driver-side interval check, no log replay and no Spark job
+  * per planning pass. Row-group pushdown inside surviving files is
+  * unchanged parquet behavior. */
+class TableLogFileIndex(spark: SparkSession, snap: TableLog.Snapshot,
+                        bucketBy: Option[(String, Int)],
+                        onlyBuckets: Option[Set[Int]])
     extends FileIndex {
 
+  private val root = snap.root
+
   /** The pinned snapshot version this index serves. */
-  val version: Long = asOf.getOrElse(
-    TableLog.versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLogFileIndex: empty log at $root")))
+  val version: Long = snap.version
 
   private val fsys = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -73,7 +73,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * entry predates the metadata field (or recorded the unknown
     * sentinel) fall back to a stat — for those files alone. */
   protected lazy val active: Seq[(String, FileStatus)] =
-    TableLog.activeFilesWithMeta(spark, root, Some(version))
+    snap.filesWithMeta
       // `onlyBuckets` restricts the index to the named bucket dirs by
       // PATH TAG at construction — the merge read-back's scope (the
       // touched-bucket set), zero I/O; untagged files stay
@@ -91,17 +91,15 @@ class TableLogFileIndex(spark: SparkSession, root: String,
         }
     }
 
-  /** The pinned active file refs (root-relative) — exposed so
-    * [[TableLogRelation.snapshotDf]] reuses the replay this
-    * constructor already paid for instead of re-reading the log, and
-    * so [[graft.plans.MetadataOnlyAgg]] can scope a stats answer to
-    * the whole snapshot. */
+  /** The pinned active file refs (root-relative), after the
+    * `onlyBuckets` scope — the files [[TableLogRelation.relationAt]]
+    * takes the footer schema from, and the scope
+    * [[graft.plans.MetadataOnlyAgg]] answers a stats query over. */
   private[graft] def activeRefs: Seq[String] = active.map(_._1)
 
-  /** Zone stats collected ONCE — listFiles must not re-read sidecars
-    * (a Spark job) inside every planning pass. */
-  protected lazy val zones: Array[TableLog.ZStat] =
-    TableLog.collectZoneRows(spark, root, Some(version))
+  /** Zone stats, decoded at most once per snapshot — listFiles must
+    * not re-read sidecars (a Spark job) inside every planning pass. */
+  private def zones: Array[TableLog.ZStat] = snap.zones
 
   /** Per-file row counts from the typed zone sidecars, for every
     * active file covered by exactly one consistent n_rows. COVERAGE
@@ -403,13 +401,11 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * the top-k rule sees keep == activeCount and leaves it alone. */
   private[graft] def restrictedTo(keep: Set[String]): TableLogFileIndex = {
     val a = active.filter { case (rel, _) => keep(rel) }
-    val z = zones
     // a NAMED subclass so `.explain` prints a readable Location line
     // (an anonymous class has an empty simple name)
     class TopKRestrictedFileIndex extends TableLogFileIndex(
-        spark, root, Some(version), bucketBy, onlyBuckets) {
+        spark, snap, bucketBy, onlyBuckets) {
       override protected lazy val active: Seq[(String, FileStatus)] = a
-      override protected lazy val zones: Array[TableLog.ZStat] = z
     }
     new TopKRestrictedFileIndex
   }
@@ -781,8 +777,10 @@ class TableLogFileIndex(spark: SparkSession, root: String,
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val preds = rangesOf(dataFilters)
-    val zoneKeep = TableLog.pruneWithStats(active.map(_._1), zones,
-      preds).toSet
+    // no translated predicate: nothing to prune, and no zone read
+    val zoneKeep =
+      if (preds.isEmpty) active.map(_._1).toSet
+      else TableLog.pruneWithStats(active.map(_._1), zones, preds).toSet
     // BUCKET pruning (the attested [[TableLog.stageBucketed]] layout):
     // a point predicate on the bucket column — equality or an IN's
     // point-interval union, long/string kinds whose serialized repr IS
@@ -831,24 +829,26 @@ object TableLogRelation {
   def enableMetadataTopK(spark: SparkSession): Unit =
     graft.plans.MetadataTopKSupport.enable(spark)
 
-  /** The pinned-version (index, HadoopFsRelation) pair [[snapshotDf]]
-    * plans from — shared with the `spark.read.format` face
-    * ([[graft.sources.TableLogSource]]), which must return a
-    * [[HadoopFsRelation]] (a BaseRelation) rather than a DataFrame. */
-  private[graft] def relationAt(spark: SparkSession, root: String,
-      asOf: Option[Long],
+  /** The (index, HadoopFsRelation) pair over one replayed snapshot
+    * that [[snapshotDf]] plans from — shared with the
+    * `spark.read.format` face ([[graft.sources.TableLogSource]]),
+    * which must return a [[HadoopFsRelation]] (a BaseRelation) rather
+    * than a DataFrame. */
+  private[graft] def relationAt(spark: SparkSession, snap: TableLog.Snapshot,
       bucketBy: Option[(String, Int)] = None,
       onlyBuckets: Option[Set[Int]] = None)
       : (TableLogFileIndex, HadoopFsRelation) = {
-    val index = new TableLogFileIndex(spark, root, asOf, bucketBy, onlyBuckets)
-    val schema = TableLog.logSchema(spark, root, Some(index.version)).getOrElse {
+    val index = new TableLogFileIndex(spark, snap, bucketBy, onlyBuckets)
+    val schema = snap.schema.getOrElse {
       // no declared schema: take the files' own uniform schema from
-      // ONE footer (files are immutable, a commit's files share one);
-      // the index already replayed the log — reuse its refs
-      val files = index.activeRefs
-      require(files.nonEmpty,
-        s"TableLogRelation: no active files at $root asOf=$asOf")
-      spark.read.parquet(TableLog.resolve(root, files.head)).schema
+      // ONE footer (files are immutable, a commit's files share one) —
+      // for a full-purge version, the last non-empty version's, as
+      // [[TableLog.snapshot]] serves it
+      val file = index.activeRefs.headOption.orElse(TableLog
+        .lastNonEmptyFiles(spark, snap.root, snap.version).map(_.head))
+      require(file.nonEmpty, s"TableLogRelation: no non-empty version " +
+        s"at or before ${snap.version} of ${snap.root}")
+      spark.read.parquet(TableLog.resolve(snap.root, file.get)).schema
     }
     (index, HadoopFsRelation(index, StructType(Nil), schema, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark))
@@ -888,23 +888,21 @@ object TableLogRelation {
                  asOf: Option[Long] = None,
                  idCol: Option[String] = None,
                  bucketBy: Option[(String, Int)] = None,
-                 onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (index, rel) = relationAt(spark, root, asOf, bucketBy, onlyBuckets)
-    val at = Some(index.version)
-    val base = org.apache.spark.sql.graftbridge.BridgePlans.ofRows(
+                 onlyBuckets: Option[Set[Int]] = None): DataFrame =
+    snapshotDfOf(spark, TableLog.replay(spark, root, asOf).committed,
+      idCol, bucketBy, onlyBuckets)
+
+  /** [[snapshotDf]] over an already-replayed snapshot — the merges'
+    * read-back, planned from the same replay as their conflict
+    * expectations. */
+  private[graft] def snapshotDfOf(spark: SparkSession, snap: TableLog.Snapshot,
+      idCol: Option[String] = None,
+      bucketBy: Option[(String, Int)] = None,
+      onlyBuckets: Option[Set[Int]] = None): DataFrame = {
+    val (_, rel) = relationAt(spark, snap, bucketBy, onlyBuckets)
+    snap.withoutDeleted(org.apache.spark.sql.graftbridge.BridgePlans.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      LogicalRelation(rel, isStreaming = false))
-    val dels = TableLog.activeDeletes(spark, root, at)
-    if (dels.isEmpty) base
-    else idCol match {
-      case None => sys.error(
-        s"TableLogRelation.snapshotDf: $root has delete sidecars; pass idCol")
-      case Some(id) =>
-        val doomed = spark.read.parquet(
-          dels.map(TableLog.resolve(root, _)): _*)
-        base.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
+      LogicalRelation(rel, isStreaming = false)),
+      idCol, "TableLogRelation.snapshotDf")
   }
 }

@@ -2,10 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.BridgeTypes.AbstractDataType
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-bigram (h1, h2) hash pairs of a token array in ONE native loop:
@@ -29,7 +31,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each token is hashed once (h1 of bigram i is reused as input state
   * for nothing — token hashes and window hashes are independent XXH64
   * runs, exactly as the two ShingleHashes calls produced them). */
-case class BigramHashes(child: Expression) extends UnaryExpression {
+case class BigramHashes(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType, containsNull = false))
+
+  // the array type check ignores element nullability, but pairs()
+  // reads every element unguarded: a nullable-element array must be
+  // an analysis error, not an NPE at run time
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case TypeCheckResult.TypeCheckSuccess
+          if child.dataType.asInstanceOf[ArrayType].containsNull =>
+        TypeCheckResult.TypeCheckFailure(
+          s"bigram_hashes requires array<string> with non-null elements, " +
+            s"got ${child.dataType.sql} with nullable elements")
+      case other => other
+    }
 
   override def dataType: DataType = BigramHashes.outType
 

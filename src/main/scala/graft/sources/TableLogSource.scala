@@ -178,14 +178,14 @@ class TableLogSource extends RelationProvider
           java.time.Instant.parse(ts).toEpochMilli))
         case _ => None
       }
-    val (index, rel) = TableLogRelation.relationAt(spark, root, asOf)
+    val snap = TableLog.replay(spark, root, asOf).committed
     // a BaseRelation cannot compose the delete-sidecar anti-join —
     // refuse rather than resurrect deleted rows
-    require(TableLog.activeDeletes(spark, root, Some(index.version)).isEmpty,
+    require(snap.deletes.isEmpty,
       s"TableLogSource: $root has delete sidecars in force at version " +
-        s"${index.version} — read it via TableLogRelation.snapshotDf" +
+        s"${snap.version} — read it via TableLogRelation.snapshotDf" +
         "(spark, root, idCol = Some(...)), which applies them")
-    rel
+    TableLogRelation.relationAt(spark, snap)._2
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -231,22 +231,20 @@ class TableLogSource extends RelationProvider
         // a concurrent blind append would survive a remove-only guard
         // and silently ride through the overwrite, and resetDeletes
         // must not cancel a delete sidecar committed concurrently
-        val readV = versions.lastOption.getOrElse(
-          TableLog.checkpointVersions(spark, root).max)
-        val before = TableLog.activeFiles(spark, root, Some(readV))
-        val dels = TableLog.activeDeletes(spark, root, Some(readV))
+        val read = TableLog.replay(spark, root)
         val (files, zm) = stage()
-        TableLog.commit(spark, root, files, remove = before, zmap = zm,
+        TableLog.commit(spark, root, files, remove = read.files, zmap = zm,
           resetDeletes = true, op = Some("OVERWRITE"),
-          expectActive = before,
-          expectDeletes = Some(dels),
-          expectNoConflictingAdds = Some((readV, _ => true)))
+          expectActive = read.files,
+          expectDeletes = Some(read.deletes),
+          expectNoConflictingAdds = Some((read.version, _ => true)))
     }
     // the relation handed back to DataFrameWriter: built WITHOUT the
     // read face's delete-sidecar refusal — a successful append to a
     // table with deletes in force must not throw AFTER its commit
     // landed (the caller would retry a write that already happened)
-    TableLogRelation.relationAt(spark, root, None)._2
+    TableLogRelation.relationAt(spark,
+      TableLog.replay(spark, root).committed)._2
   }
 }
 

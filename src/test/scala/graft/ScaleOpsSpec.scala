@@ -2674,7 +2674,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     //    path). sizeInBytes is the log's answer, matching the disk
     //    exactly.
     CountingLocalFs.reset()
-    val idx = new TableLogFileIndex(spark0, root, None)
+    val idx = new TableLogFileIndex(spark0,
+      TableLog.replay(spark0, root).committed, None, None)
     assert(idx.sizeInBytes === expectBytes)
     assert(CountingLocalFs.dataFileStats() === 0,
       s"status-set build stat-ed ${CountingLocalFs.dataFileStats()} " +
@@ -2689,7 +2690,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     //    still builds stat-free from the checkpoint alone
     TableLog.expireLog(spark0, root, TableLog.writeCheckpoint(spark0, root))
     CountingLocalFs.reset()
-    val idx2 = new TableLogFileIndex(spark0, root, None)
+    val idx2 = new TableLogFileIndex(spark0,
+      TableLog.replay(spark0, root).committed, None, None)
     assert(idx2.sizeInBytes === expectBytes)
     assert(CountingLocalFs.dataFileStats() === 0,
       "checkpoint must carry filesMeta — post-expiry builds re-stat nothing")
@@ -2701,7 +2703,8 @@ class ScaleOpsSpec extends AnyFunSuite {
       .replaceAll("\"addmeta\":\\[[^\\]]*\\],", "")
     java.nio.file.Files.write(ckpt, stripped.getBytes("UTF-8"))
     CountingLocalFs.reset()
-    val idx3 = new TableLogFileIndex(spark0, root, None)
+    val idx3 = new TableLogFileIndex(spark0,
+      TableLog.replay(spark0, root).committed, None, None)
     assert(idx3.sizeInBytes === expectBytes)
     val nActive = TableLog.activeFiles(spark0, root).length
     assert(CountingLocalFs.dataFileStats() === nActive,

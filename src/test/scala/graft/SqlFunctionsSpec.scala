@@ -78,7 +78,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
     import graft.functions.{TextFunctions => TF}
     def hofTokens(text: org.apache.spark.sql.Column) =
       filter(split(text, " "), t => t =!= lit(""))
-    // corpus parity (the type must match too: nullable elements, like
+    // corpus parity (the type must match too: non-null elements, like
     // filter(split(...)) declares)
     val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
     val both = docs.select(TF.tokens(col("text")).as("native"),
@@ -117,6 +117,14 @@ class SqlFunctionsSpec extends AnyFunSuite {
         TF.tokens(col("t"))).as("p"))
       .collect().map(_.getSeq[Any](0).length)
     assert(edge.toSeq === Seq(0, 0, 1))
+  }
+
+  test("BigramHashes refuses a token array with nullable elements at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(graft.plans.BigramHashes.bigramHashes(
+        array(lit("a"), lit(null).cast("string"))))
+    }
+    assert(e.getMessage.contains("non-null elements"), e.getMessage)
   }
 
   test("native MarkFilter matches the higher-order filter/exists reference") {
